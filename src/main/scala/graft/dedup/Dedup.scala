@@ -317,7 +317,7 @@ object Dedup {
     * cached for the join's two sides; sketch arrays never are). The
     * candidate join
     * is asymmetric (delta sketch elements LEFT, union index RIGHT —
-    * the [[DedupSnapshot.ingestDelta]] deltaPairs shape), so no
+    * the [[DedupSnapshot.ingestDelta]] shape), so no
     * store-internal pair is ever generated. Per-refresh COMPUTE is:
     * sketch the delta, one (bucket)-count census over index slivers
     * (exchange-free store-side when the persisted index is bucketed
@@ -348,13 +348,10 @@ object Dedup {
       storeSketches: DataFrame, storeIndex: DataFrame, dsk: DataFrame,
       k: Int, threshold: Double, bucketCap: Int,
       salt: BucketSalt): DataFrame = {
-    val allIdx = storeIndex.unionByName(bandedSketchIndex(dsk))
-    val pairs = asymmetricBandedPairs(bandedSketchIndex(dsk), allIdx,
-      bucketCap, salt,
-      // split cap census (r20): store side exchange-free off the
-      // bucketed index table; sides disjoint (caller anti-joins the
-      // delta ids out of the store artifacts / delta ids are new)
-      storeBanded = Some(storeIndex))
+    // delta ids are new / anti-joined out of the store artifacts by the
+    // caller, so the sides are disjoint
+    val pairs = asymmetricBandedPairs(bandedSketchIndex(dsk), storeIndex,
+      bucketCap, salt)
     sketchEstimates(pairs, storeSketches.unionByName(dsk), k, threshold)
   }
 
@@ -470,47 +467,40 @@ object Dedup {
       .select("id_a", "id_b").distinct()
   }
 
-  /** Asymmetric banded candidates DELTA-vs-UNION: the left side is
-    * always a delta row, so no store-internal pair is ever generated
-    * (a plain self-join over the union would spend its time
-    * re-pairing the store against itself). Same `bucketCap` salting
-    * discipline as [[bandedPairs]] — the census runs over the union,
-    * rows of flooded buckets salt into deterministic xxhash(id, band)
-    * sub-buckets on BOTH sides. Shared by
-    * [[graft.dedup.DedupSnapshot]]'s MinHash delta stage (d11) and
-    * [[containmentSketchDelta]] (d14). `union` must CONTAIN the
-    * delta's banded rows (so delta-delta pairs are found too).
+  /** Asymmetric banded candidates DELTA-vs-(STORE ∪ DELTA): the left
+    * side is always a delta row, so no store-internal pair is ever
+    * generated (a plain self-join over the union would spend its time
+    * re-pairing the store against itself), while delta-delta pairs are
+    * still found. Same `bucketCap` salting discipline as
+    * [[bandedPairs]] — the census counts the union, rows of flooded
+    * buckets salt into deterministic sub-buckets on BOTH sides — so
+    * the output is exactly the delta-touching subset of
+    * `bandedPairs(store ∪ delta, bucketCap, salt)` (spec-pinned).
+    * Shared by [[graft.dedup.DedupSnapshot]]'s MinHash delta stage
+    * (d11) and [[containmentSketchDelta]] (d14). Contract: store and
+    * delta ids are disjoint.
     */
   private[graft] def asymmetricBandedPairs(deltaBanded: DataFrame,
-                                           unionBanded: DataFrame,
+                                           storeBanded: DataFrame,
                                            bucketCap: Int,
-                                           salt: BucketSalt = BucketSalt.XxHash,
-                                           storeBanded: Option[DataFrame] = None): DataFrame = {
+                                           salt: BucketSalt = BucketSalt.XxHash): DataFrame = {
+    val unionBanded = storeBanded.unionByName(deltaBanded)
     val (l, r, keys) =
       if (bucketCap <= 0) (deltaBanded, unionBanded, Seq("band", "bucket"))
       else {
-        // bucket census for the cap: count per (band, bucket) over the
-        // union. When the caller hands the store side separately
-        // (optimization r20, guide §2.4), the census SPLITS — a
-        // store-side census (exchange-FREE: the persisted sigs/index
-        // tables are bucketed on exactly these keys) plus a delta-sized
-        // census, merged by a full-outer sum over census slivers — so a
-        // refresh no longer re-shuffles the whole store index just to
-        // count bucket sizes. Counts are identical exact integers
-        // (|union| = |store| + |delta| per bucket; the sides are
-        // disjoint by the caller's contract).
-        val counts = storeBanded match {
-          case Some(st) =>
-            val sc = st.groupBy("band", "bucket").agg(count(lit(1)).as("__bns"))
-            val dc = deltaBanded.groupBy("band", "bucket")
-              .agg(count(lit(1)).as("__bnd"))
-            sc.join(dc, Seq("band", "bucket"), "full")
-              .select(col("band"), col("bucket"),
-                (coalesce(col("__bns"), lit(0L)) +
-                  coalesce(col("__bnd"), lit(0L))).as("__bn"))
-          case None =>
-            unionBanded.groupBy("band", "bucket").agg(count(lit(1)).as("__bn"))
-        }
+        // bucket census for the cap, SPLIT (optimization r20, guide
+        // §2.4): a store-side census (exchange-FREE: the persisted
+        // sigs/index tables are bucketed on exactly these keys) plus a
+        // delta-sized census, merged by a full-outer sum over census
+        // slivers — so a refresh never re-shuffles the whole store
+        // index just to count bucket sizes. Counts equal the union's
+        // (|union| = |store| + |delta| per bucket; sides disjoint).
+        val sc = storeBanded.groupBy("band", "bucket").agg(count(lit(1)).as("__bns"))
+        val dc = deltaBanded.groupBy("band", "bucket").agg(count(lit(1)).as("__bnd"))
+        val counts = sc.join(dc, Seq("band", "bucket"), "full")
+          .select(col("band"), col("bucket"),
+            (coalesce(col("__bns"), lit(0L)) +
+              coalesce(col("__bnd"), lit(0L))).as("__bn"))
         val nb = ceil(col("__bn").cast("double") / bucketCap).cast("long")
         def tag(df: DataFrame) = df.join(counts, Seq("band", "bucket"))
           .withColumn("__sub", when(nb <= 1, lit(0L)).otherwise(

@@ -1,6 +1,7 @@
 package graft.dedup
 
 import graft.functions.TextFns
+import graft.store.{BucketedTable, WriteLease}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -13,8 +14,8 @@ import org.apache.spark.sql.functions._
   * the dedup side-indexes a 100 TB refresh needs).
   *
   * Four catalog tables, all written ONCE at corpus build and reused by
-  * every delta (the BucketedStore discipline, `store/Store.scala` —
-  * bucketed+sorted tables join/aggregate store-side with NO exchange):
+  * every delta (each a [[graft.store.BucketedTable]] — bucketed+sorted
+  * tables join/aggregate store-side with NO exchange):
   *
   *  - `<prefix>_corpus`  (doc_id, <keep cols>, fp): the surviving
   *    corpus rows, bucketed by fp.
@@ -51,61 +52,34 @@ final class DedupSnapshot(val spark: SparkSession, val prefix: String,
                           val bands: Int = 16, val rows: Int = 4,
                           val threshold: Double = 0.8,
                           val bucketCap: Int = 100000) {
-  private val corpusT = s"${prefix}_corpus"
-  private val seenT = s"${prefix}_seen"
-  private val sigsT = s"${prefix}_sigs"
-  private val shinglesT = s"${prefix}_shingles"
-  private val tombsT = s"${prefix}_tombs"
+  private def table(name: String, keys: String*) =
+    new BucketedTable(spark, s"${prefix}_$name", keys, nBuckets)
+  private val corpusT = table("corpus", "fp")
+  private val seenT = table("seen", "fp")
+  private val sigsT = table("sigs", "band", "bucket")
+  private val shinglesT = table("shingles", "id")
+  private val tombsT = table("tombs", "id")
 
-  private def lockPath = graft.store.WriteLease.lockPathFor(
-    spark.conf.get("spark.sql.warehouse.dir") + s"/graft-snap-$prefix")
-
-  /** Single-writer lease over all four tables (the store contract): a
+  /** Single-writer lease over all five tables (the store contract): a
     * concurrent build/commit fails loudly, never silently interleaves. */
-  private def locked[T](op: String)(body: => T): T = {
-    val fs = lockPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    graft.store.WriteLease.withLease(fs, lockPath, op)(body)
-  }
+  private val lease =
+    BucketedTable.inWarehouse(spark, s"graft-snap-$prefix").toString
 
-  private def writeBucketed(df: DataFrame, tbl: String,
-                            keys: Seq[String], mode: SaveMode): Unit = {
-    // align the write with the bucket spec (optimization r20, guide
-    // §6): repartition(nBuckets, keys) uses the same murmur3 pmod as
-    // the bucketing, so each task holds exactly one bucket and writes
-    // ONE file — without it every upstream task wrote a file per
-    // bucket it touched (32 tasks × 8 buckets ≈ 250 tiny files per
-    // table), paying per-file open cost on every later probe of the
-    // store. Measured (sf0.1 store build): sigs 3.1 → 0.9 s,
-    // shingles 2.0 → 0.9 s per write; table CONTENT is identical —
-    // only file layout changes.
-    df.repartition(nBuckets, keys.map(org.apache.spark.sql.functions.col): _*)
-      .write.mode(mode)
-      .bucketBy(nBuckets, keys.head, keys.tail: _*).sortBy(keys.head, keys.tail: _*)
-      .format("parquet").saveAsTable(tbl)
-    // the write may run on a DIFFERENT SparkSession than `spark` (a
-    // foreachBatch micro-batch executes on a session CLONE, and `df`
-    // carries it) — that session's saveAsTable does not invalidate
-    // THIS session's cached table relation, so later reads through
-    // `spark.table` would list the pre-append files forever. Refresh
-    // unconditionally: metadata-only, and a no-op when sessions match.
-    spark.catalog.refreshTable(tbl)
-  }
-
-  def corpus(): DataFrame = spark.table(corpusT)
+  def corpus(): DataFrame = corpusT.load()
 
   /** The pending tombstone ids `(id)` — empty until a [[takedown]],
     * cleared by the next [[writeCorpus]] rebuild. Public so a release
     * AUDIT (cp9) can count erased ids in downstream artifacts — the
     * check a data-protection officer actually asks for. */
   def tombstones(): DataFrame =
-    if (spark.catalog.tableExists(tombsT)) spark.table(tombsT)
+    if (tombsT.exists) tombsT.load()
     else spark.range(0).select(col("id"))
 
   /** [[corpus]] minus tombstoned ids — the read every consumer should
     * use after any [[takedown]]; `idCol` names the id column the
     * corpus was written with. */
   def liveCorpus(idCol: String): DataFrame =
-    minusTombs(spark.table(corpusT), idCol)
+    minusTombs(corpusT.load(), idCol)
 
   /** Right-to-erasure for the SNAPSHOT (d15) — the n10 contract
     * applied to the dedup store: deletion is a delta-sized tombstone
@@ -129,24 +103,18 @@ final class DedupSnapshot(val spark: SparkSession, val prefix: String,
     * leave the candidate space.
     */
   def takedown(ids: DataFrame, idCol: String): Unit =
-    locked("snapshot-takedown") {
+    WriteLease.withLease(spark, lease, "snapshot-takedown") {
       // id stored AS WRITTEN — a long cast would NULL out string ids
       // and the anti-join would silently erase nothing (review r13)
-      val out = ids.select(col(idCol).as("id")).distinct()
-      if (!spark.catalog.tableExists(tombsT)) {
-        val p = new org.apache.hadoop.fs.Path(
-          spark.conf.get("spark.sql.warehouse.dir") + s"/$tombsT")
-        val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (fs.exists(p)) fs.delete(p, true)
-        writeBucketed(out, tombsT, Seq("id"), SaveMode.ErrorIfExists)
-      } else writeBucketed(out, tombsT, Seq("id"), SaveMode.Append)
+      if (!tombsT.exists) tombsT.drop() // an earlier session's location
+      tombsT.write(ids.select(col(idCol).as("id")).distinct(), SaveMode.Append)
     }
 
   /** Anti-join the tombstone sliver (no-op when none exists). */
   private def minusTombs(df: DataFrame, idName: String): DataFrame =
-    if (!spark.catalog.tableExists(tombsT)) df
+    if (!tombsT.exists) df
     else df.join(
-      broadcast(spark.table(tombsT).select(col("id").as(idName))),
+      broadcast(tombsT.load().select(col("id").as(idName))),
       Seq(idName), "left_anti")
 
   /** Full (re)build: run the complete dedup pipeline over `docs` and
@@ -155,58 +123,28 @@ final class DedupSnapshot(val spark: SparkSession, val prefix: String,
     * persisted shingle table.
     */
   def writeCorpus(docs: DataFrame, idCol: String, textCol: String,
-                  keepCols: Seq[String] = Nil): Unit = locked("snapshot-build") {
-    // tombstones clear too: rebuild IS the compaction point
-    Seq(corpusT, seenT, sigsT, shinglesT, tombsT).foreach { t =>
-      spark.sql(s"DROP TABLE IF EXISTS $t")
-      // a FRESH session's catalog doesn't know a previous session's
-      // managed table, so DROP alone leaves the location behind and
-      // the create fails with LOCATION_ALREADY_EXISTS (the h2 pattern)
-      val p = new org.apache.hadoop.fs.Path(
-        spark.conf.get("spark.sql.warehouse.dir") + s"/$t")
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(p)) fs.delete(p, true)
+                  keepCols: Seq[String] = Nil): Unit =
+    WriteLease.withLease(spark, lease, "snapshot-build") {
+      // tombstones clear too: rebuild IS the compaction point
+      Seq(corpusT, seenT, sigsT, shinglesT, tombsT).foreach(_.drop())
+      val fp = TextFns.fingerprint(col(textCol))
+      val w = Window.partitionBy(fp).orderBy(col(idCol))
+      val exact = graft.Materialize.reuse(
+        docs.withColumn("fp", fp)
+          .withColumn("__rn", row_number().over(w))
+          .filter(col("__rn") === 1).drop("__rn"))
+      val sh = Dedup.hashedShingles(exact, idCol, textCol, n, Nil)
+      val banded = graft.Materialize.reuse(Dedup.minHashBanded(sh, bands, rows))
+      val drops = Dedup.nearDupDrops(
+        Dedup.verifyJaccard(Dedup.bandedPairs(banded, bucketCap), sh, threshold))
+      val surv = exact.join(
+        drops.select(col("drop_id").as(idCol)), Seq(idCol), "left_anti")
+      corpusT.write(surv.select((idCol +: keepCols :+ "fp").map(col): _*),
+        SaveMode.ErrorIfExists)
+      seenT.write(exact.select(col(idCol).as("id"), col("fp")), SaveMode.ErrorIfExists)
+      sigsT.write(banded, SaveMode.ErrorIfExists)
+      shinglesT.write(sh, SaveMode.ErrorIfExists)
     }
-    val fp = TextFns.fingerprint(col(textCol))
-    val w = Window.partitionBy(fp).orderBy(col(idCol))
-    val exact = graft.Materialize.reuse(
-      docs.withColumn("fp", fp)
-        .withColumn("__rn", row_number().over(w))
-        .filter(col("__rn") === 1).drop("__rn"))
-    val sh = Dedup.hashedShingles(exact, idCol, textCol, n, Nil)
-    val banded = graft.Materialize.reuse(Dedup.minHashBanded(sh, bands, rows))
-    val drops = Dedup.nearDupDrops(
-      Dedup.verifyJaccard(Dedup.bandedPairs(banded, bucketCap), sh, threshold))
-    val surv = exact.join(
-      drops.select(col("drop_id").as(idCol)), Seq(idCol), "left_anti")
-    writeBucketed(surv.select((idCol +: keepCols :+ "fp").map(col): _*),
-      corpusT, Seq("fp"), SaveMode.ErrorIfExists)
-    writeBucketed(exact.select(col(idCol).as("id"), col("fp")),
-      seenT, Seq("fp"), SaveMode.ErrorIfExists)
-    writeBucketed(banded, sigsT, Seq("band", "bucket"), SaveMode.ErrorIfExists)
-    writeBucketed(sh, shinglesT, Seq("id"), SaveMode.ErrorIfExists)
-  }
-
-  /** Banded candidate pairs DELTA-vs-(STORE ∪ DELTA): the left side is
-    * always a delta row, so no store-internal pair is ever generated
-    * (a plain self-join over the union would spend its time re-pairing
-    * the store against itself). Under the [[Dedup.bandedPairs]]
-    * `bucketCap` discipline: the (band, bucket) census runs over the
-    * union — exchange-free on the store side, the sigs table is
-    * bucketed on exactly these keys — and rows of flooded buckets salt
-    * into deterministic xxhash(id, band) sub-buckets on BOTH sides, so
-    * no join task sees more than ~cap² candidates whatever the delta
-    * floods with. Same recall trade as bandedPairs, same re-find math
-    * (the other bands, CC transitivity).
-    */
-  private def deltaPairs(deltaBanded: DataFrame,
-                         storeBanded: DataFrame): DataFrame =
-    Dedup.asymmetricBandedPairs(
-      deltaBanded, storeBanded.unionByName(deltaBanded), bucketCap,
-      // store side handed separately: the cap census then reads the
-      // bucketed sigs table exchange-free instead of re-shuffling the
-      // union every refresh (r20; delta ids are new, sides disjoint)
-      storeBanded = Some(storeBanded))
 
   /** Dedup `delta` against the snapshot (and against itself) and
     * return the surviving delta rows. Reads ONLY the seen/sigs/
@@ -240,9 +178,9 @@ final class DedupSnapshot(val spark: SparkSession, val prefix: String,
     // idempotent anti-joins skip while the tombstone keeps every read
     // hiding it — silent half-visibility. Fail loudly; the remedy is
     // a writeCorpus rebuild (the compaction point).
-    if (spark.catalog.tableExists(tombsT)) {
+    if (tombsT.exists) {
       val nT = delta.select(col(idCol)).distinct()
-        .join(spark.table(tombsT).select(col("id").as(idCol)),
+        .join(tombsT.load().select(col("id").as(idCol)),
           Seq(idCol), "left_semi").count()
       if (nT > 0) throw new IllegalArgumentException(
         s"$nT delta id(s) have pending snapshot tombstones " +
@@ -267,14 +205,18 @@ final class DedupSnapshot(val spark: SparkSession, val prefix: String,
       delta.withColumn("fp", fp)
         .withColumn("__rn", row_number().over(w))
         .filter(col("__rn") === 1).drop("__rn")
-        .join(minusTombs(spark.table(seenT), "id").select("fp"),
+        .join(minusTombs(seenT.load(), "id").select("fp"),
           Seq("fp"), "left_anti"))
     val dsh = Dedup.hashedShingles(dNew, idCol, textCol, n, Nil)
     val dBanded = graft.Materialize.reuse(Dedup.minHashBanded(dsh, bands, rows))
-    val pairs = deltaPairs(dBanded, minusTombs(spark.table(sigsT), "id"))
+    // delta-vs-(store ∪ delta) banded pairs: no store-internal pair is
+    // generated, and the cap census reads the bucketed sigs table
+    // exchange-free (delta ids are new, so the sides are disjoint)
+    val pairs = Dedup.asymmetricBandedPairs(dBanded,
+      minusTombs(sigsT.load(), "id"), bucketCap)
     // verification shingles: store side from the persisted table
     // (the corpus is NOT re-shingled), delta side from this pass
-    val allSh = minusTombs(spark.table(shinglesT), "id").unionByName(dsh)
+    val allSh = minusTombs(shinglesT.load(), "id").unionByName(dsh)
     val verified = Dedup.verifyJaccard(pairs, allSh, threshold)
     // CC over delta-touching pairs only; a cluster's min is a store id
     // whenever any store doc is reachable (store ids < delta ids), so
@@ -284,27 +226,17 @@ final class DedupSnapshot(val spark: SparkSession, val prefix: String,
       .select(col("id").as(idCol))
     val surv = dNew.join(drops, Seq(idCol), "left_anti")
     if (!commit) surv.select((idCol +: keepCols).map(col): _*)
-    else locked("snapshot-commit") {
+    else WriteLease.withLease(spark, lease, "snapshot-commit") {
       // truncated for the same recache reason as dNew: surv's lineage
       // reads sigs/shingles, which the appends below update
       val kept = graft.Materialize.truncate(
         surv.select((idCol +: keepCols :+ "fp").map(col): _*))
-      // replay-idempotent append: rows whose id the target already
-      // holds are skipped (truncated BEFORE the write — the append
-      // must not re-scan its own target mid-job)
-      def appendFresh(df: DataFrame, tbl: String, bucketKeys: Seq[String],
-                      dfIdCol: String): Unit = {
-        val out =
-          if (!idempotentCommit) df
-          else graft.Materialize.truncate(df.join(
-            spark.table(tbl).select(col(dfIdCol)), Seq(dfIdCol), "left_anti"))
-        writeBucketed(out, tbl, bucketKeys, SaveMode.Append)
-      }
-      appendFresh(kept, corpusT, Seq("fp"), idCol)
-      appendFresh(dNew.select(col(idCol).as("id"), col("fp")),
-        seenT, Seq("fp"), "id")
-      appendFresh(dBanded, sigsT, Seq("band", "bucket"), "id")
-      appendFresh(dsh, shinglesT, Seq("id"), "id")
+      def fresh(c: String) = if (idempotentCommit) Some(c) else None
+      corpusT.write(kept, SaveMode.Append, fresh(idCol))
+      seenT.write(dNew.select(col(idCol).as("id"), col("fp")), SaveMode.Append,
+        fresh("id"))
+      sigsT.write(dBanded, SaveMode.Append, fresh("id"))
+      shinglesT.write(dsh, SaveMode.Append, fresh("id"))
       kept.drop("fp")
     }
   }
@@ -342,49 +274,23 @@ final class SketchStore(val spark: SparkSession, val prefix: String,
                         val k: Int = 32, val threshold: Double = 0.8,
                         val bucketCap: Int = 100000,
                         val salt: Dedup.BucketSalt = Dedup.BucketSalt.XxHash) {
-  private val skT = s"${prefix}_sk"
-  private val idxT = s"${prefix}_skidx"
+  private val skT = new BucketedTable(spark, s"${prefix}_sk", Seq("id"), nBuckets)
+  private val idxT =
+    new BucketedTable(spark, s"${prefix}_skidx", Seq("bucket"), nBuckets)
+  private val lease =
+    BucketedTable.inWarehouse(spark, s"graft-sketch-$prefix").toString
 
-  private def lockPath = graft.store.WriteLease.lockPathFor(
-    spark.conf.get("spark.sql.warehouse.dir") + s"/graft-sketch-$prefix")
-
-  private def locked[T](op: String)(body: => T): T = {
-    val fs = lockPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    graft.store.WriteLease.withLease(fs, lockPath, op)(body)
-  }
-
-  private def writeBucketed(df: DataFrame, tbl: String,
-                            keys: Seq[String], mode: SaveMode): Unit = {
-    // bucket-spec-aligned write — see DedupSnapshot.writeBucketed (one
-    // file per bucket instead of one per (task, bucket); content
-    // identical, measured 2-6x faster store writes at sf0.1)
-    df.repartition(nBuckets, keys.map(org.apache.spark.sql.functions.col): _*)
-      .write.mode(mode)
-      .bucketBy(nBuckets, keys.head, keys.tail: _*)
-      .sortBy(keys.head, keys.tail: _*)
-      .format("parquet").saveAsTable(tbl)
-    // foreachBatch clones the session (see DedupSnapshot.writeBucketed)
-    spark.catalog.refreshTable(tbl)
-  }
-
-  def sketches(): DataFrame = spark.table(skT)
-  def index(): DataFrame = spark.table(idxT)
+  def sketches(): DataFrame = skT.load()
+  def index(): DataFrame = idxT.load()
 
   /** Full (re)build: sketch `docs` once, persist table + index. */
   def build(docs: DataFrame, idCol: String, textCol: String): Unit =
-    locked("sketch-build") {
-      Seq(skT, idxT).foreach { t =>
-        spark.sql(s"DROP TABLE IF EXISTS $t")
-        val p = new org.apache.hadoop.fs.Path(
-          spark.conf.get("spark.sql.warehouse.dir") + s"/$t")
-        val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (fs.exists(p)) fs.delete(p, true)
-      }
+    WriteLease.withLease(spark, lease, "sketch-build") {
+      Seq(skT, idxT).foreach(_.drop())
       val sk = graft.Materialize.reuse(
         Dedup.bottomKSketches(docs, idCol, textCol, n, k))
-      writeBucketed(sk, skT, Seq("id"), SaveMode.ErrorIfExists)
-      writeBucketed(Dedup.bandedSketchIndex(sk), idxT, Seq("bucket"),
-        SaveMode.ErrorIfExists)
+      skT.write(sk, SaveMode.ErrorIfExists)
+      idxT.write(Dedup.bandedSketchIndex(sk), SaveMode.ErrorIfExists)
     }
 
   /** Probe the store with a delta and return the delta-touching
@@ -415,17 +321,11 @@ final class SketchStore(val spark: SparkSession, val prefix: String,
       minusDelta(sketches()), minusDelta(index()), dsk,
       k, threshold, bucketCap, salt)
     if (!commit) pairs
-    else locked("sketch-commit") {
+    else WriteLease.withLease(spark, lease, "sketch-commit") {
       val out = graft.Materialize.truncate(pairs)
-      def appendFresh(df: DataFrame, tbl: String, keys: Seq[String]): Unit = {
-        val fresh =
-          if (!idempotentCommit) df
-          else graft.Materialize.truncate(df.join(
-            spark.table(tbl).select(col("id")), Seq("id"), "left_anti"))
-        writeBucketed(fresh, tbl, keys, SaveMode.Append)
-      }
-      appendFresh(dsk, skT, Seq("id"))
-      appendFresh(Dedup.bandedSketchIndex(dsk), idxT, Seq("bucket"))
+      val fresh = if (idempotentCommit) Some("id") else None
+      skT.write(dsk, SaveMode.Append, fresh)
+      idxT.write(Dedup.bandedSketchIndex(dsk), SaveMode.Append, fresh)
       out
     }
   }

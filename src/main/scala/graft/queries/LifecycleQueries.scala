@@ -306,13 +306,9 @@ object LifecycleQueries {
         .filter(col("l_returnflag").isin(flags: _*))
         .groupBy("l_returnflag", "l_linestatus")
         .agg(sum("l_quantity").as("qty"))
-      s.sql("DROP TABLE IF EXISTS graft_h2_store")
-      val wh = s.conf.get("spark.sql.warehouse.dir")
-      val p = new org.apache.hadoop.fs.Path(s"$wh/graft_h2_store")
-      val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(p)) fs.delete(p, true)
       val bs = new graft.store.BucketedStore(s, "graft_h2_store",
         Seq("l_returnflag", "l_linestatus"), nBuckets = 4)
+      bs.drop()
       bs.mergeIn(sweep(Seq("A", "N")))
       bs.mergeIn(sweep(Seq("R")))
       bs.load()

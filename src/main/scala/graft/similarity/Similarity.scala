@@ -746,9 +746,7 @@ object Similarity {
       */
     def delete(ids: DataFrame, idCol: String, path: String): Unit = {
       val spark = ids.sparkSession
-      val lock = graft.store.WriteLease.lockPathFor(path)
-      val fs = lock.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      graft.store.WriteLease.withLease(fs, lock, "index-delete") {
+      graft.store.WriteLease.withLease(spark, path, "index-delete") {
         ids.select(col(idCol).cast("long").as("id")).distinct()
           .write.mode("append").parquet(tombstonePath(path).toString)
       }
@@ -811,9 +809,7 @@ object Similarity {
                path: String, refitAt: Double = 0.5,
                skipTombstoned: Boolean = false): AppendResult = {
       val spark = delta.sparkSession
-      val lock = graft.store.WriteLease.lockPathFor(path)
-      val fs = lock.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      graft.store.WriteLease.withLease(fs, lock, "index-append") {
+      graft.store.WriteLease.withLease(spark, path, "index-append") {
         val h = load(spark, path)
         val dedup = delta.dropDuplicates(idCol)
         // tombstone probe: read the (sliver) table ONCE, and skip the

@@ -43,6 +43,14 @@ private[graft] object WriteLease {
       .delete(lock, true)
   }
 
+  /** Run `body` holding the lease on `dest` (lock at [[lockPathFor]]). */
+  def withLease[T](spark: org.apache.spark.sql.SparkSession, dest: String,
+                   op: String)(body: => T): T = {
+    val lock = lockPathFor(dest)
+    withLease(lock.getFileSystem(spark.sparkContext.hadoopConfiguration),
+      lock, op)(body)
+  }
+
   def withLease[T](fs: org.apache.hadoop.fs.FileSystem,
                    lock: org.apache.hadoop.fs.Path, op: String)(body: => T): T = {
     val payload = s"pid=${ProcessHandle.current().pid()} op=$op " +
@@ -90,32 +98,42 @@ private[graft] object WriteLease {
     } finally fs.delete(lock, true)
   }
 
-  /** Lease `dest`, produce the new store at `<dest>.__tmp` via `write`,
-    * then swap it in with CHECKED renames (dest → `.__bak`, tmp → dest,
-    * drop bak) — the save-side sinks' shared discipline: a second
-    * writer throws [[ConcurrentWriteException]], and a killed write
-    * leaves the old store (or none) at `dest`, never a mix. `what`
-    * names the artifact in error messages. */
+  /** Lease `dest`, then [[swap]] the output of `write` in — the
+    * save-side sinks' shared discipline: a second writer throws
+    * [[ConcurrentWriteException]], and a killed write leaves the old
+    * store (or none) at `dest`, never a mix. */
   def stageAndSwap(fs: org.apache.hadoop.fs.FileSystem,
                    dest: org.apache.hadoop.fs.Path, op: String,
                    what: String)(write: org.apache.hadoop.fs.Path => Unit): Unit =
-    withLease(fs, lockPathFor(dest.toString), op) {
-      val tmp = new org.apache.hadoop.fs.Path(dest.toString + ".__tmp")
-      if (fs.exists(tmp)) fs.delete(tmp, true)
-      write(tmp)
-      val bak = new org.apache.hadoop.fs.Path(dest.toString + ".__bak")
-      def renameOrAbort(from: org.apache.hadoop.fs.Path,
-                        to: org.apache.hadoop.fs.Path, keep: String): Unit =
-        if (!fs.rename(from, to))
-          throw new java.io.IOException(
-            s"$what swap: rename $from -> $to failed; $keep")
-      if (fs.exists(bak)) fs.delete(bak, true)
-      if (fs.exists(dest))
-        renameOrAbort(dest, bak, s"$what left untouched at $dest")
-      renameOrAbort(tmp, dest,
-        s"previous $what preserved at $bak (restore by renaming it back)")
-      if (fs.exists(bak)) fs.delete(bak, true)
-    }
+    withLease(fs, lockPathFor(dest.toString), op)(swap(fs, dest, what)(write))
+
+  /** Unleased half of [[stageAndSwap]] (callers hold the lease): produce
+    * the new store at `<dest>.__tmp` via `write`, then swap it in with
+    * CHECKED renames (dest → `.__bak`, tmp → dest, drop bak). Proceeding
+    * past a failed rename (dest recreated concurrently, cross-FS rename
+    * quirk) and then deleting `.__bak` would destroy the only surviving
+    * copy, so a failed rename throws an IOException naming the step and
+    * leaves the store recoverable — untouched at `dest` or intact at
+    * `.__bak`. `what` names the artifact in error messages. */
+  def swap(fs: org.apache.hadoop.fs.FileSystem,
+           dest: org.apache.hadoop.fs.Path,
+           what: String)(write: org.apache.hadoop.fs.Path => Unit): Unit = {
+    val tmp = new org.apache.hadoop.fs.Path(dest.toString + ".__tmp")
+    if (fs.exists(tmp)) fs.delete(tmp, true)
+    write(tmp)
+    val bak = new org.apache.hadoop.fs.Path(dest.toString + ".__bak")
+    def renameOrAbort(from: org.apache.hadoop.fs.Path,
+                      to: org.apache.hadoop.fs.Path, keep: String): Unit =
+      if (!fs.rename(from, to))
+        throw new java.io.IOException(
+          s"$what swap: rename $from -> $to failed; $keep")
+    if (fs.exists(bak)) fs.delete(bak, true)
+    if (fs.exists(dest))
+      renameOrAbort(dest, bak, s"$what left untouched at $dest")
+    renameOrAbort(tmp, dest,
+      s"previous $what preserved at $bak (restore by renaming it back)")
+    if (fs.exists(bak)) fs.delete(bak, true)
+  }
 }
 
 /** Harvest-store merge family (SURVEY §2.4, M1-M12).
@@ -223,6 +241,40 @@ object Merge {
     * other (test_case_runner.py:134-190) — exactly NewWins. */
   def alignFill(base: DataFrame, fill: DataFrame, keys: Seq[String]): DataFrame =
     merge(fill, base, keys, NewWins)
+
+  /** The partition-pruned merge both stores share (`partitionCols` ⊆
+    * `keys`, so any store row that can match or conflict with a delta
+    * key shares the delta's partition values): merge `neu` into only
+    * the `old` rows whose partition tuple `neu` touches (null-safe
+    * match), stage the result at `stage` — conflicts fire here, before
+    * any mutation — and hand the re-read stage to `overwrite`, a
+    * dynamic partition overwrite of exactly the touched partitions.
+    * The stage is the read-before-overwrite barrier (the store is both
+    * the merge's source and its sink). No-op for an empty delta. */
+  private[store] def mergeTouched(old: DataFrame, neu: DataFrame,
+                                  keys: Seq[String], partitionCols: Seq[String],
+                                  mode: Mode, stage: org.apache.hadoop.fs.Path)(
+                                  overwrite: DataFrame => Unit): Unit = {
+    // bounded collect: the distinct partition tuples of ONE delta
+    val touched = neu.select(partitionCols.map(col): _*).distinct().collect()
+    if (touched.nonEmpty) {
+      val pred = touched.map { r =>
+        partitionCols.zipWithIndex
+          .map { case (c, i) => col(c) <=> lit(r.get(i)) }
+          .reduce(_ && _)
+      }.reduce(_ || _)
+      val spark = old.sparkSession
+      orConflict(merge(old.filter(pred), neu, keys, mode)
+        .select(old.columns.map(col).toIndexedSeq: _*)
+        .write.mode(SaveMode.Overwrite).parquet(stage.toString))
+      // read back as written (no imposed schema: the store read infers
+      // partition-col types from dir names, which can be narrower than
+      // the staged data columns)
+      try overwrite(spark.read.parquet(stage.toString))
+      finally stage.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .delete(stage, true)
+    }
+  }
 }
 
 /** On-disk parquet store with harvest semantics (M4/M5/M7-M11 + IO1/IO5).
@@ -238,24 +290,15 @@ final class ParquetStore(val spark: SparkSession, val path: String,
                          val keys: Seq[String],
                          val partitionCols: Seq[String] = Nil) {
 
-  private def hadoopFs = new org.apache.hadoop.fs.Path(path)
-    .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  private val lockPath = WriteLease.lockPathFor(path)
-
-  /** Every mutating op runs under the single-writer lease (see
-    * [[WriteLease]]); a concurrent writer gets a typed loud failure. */
-  private def locked[T](op: String)(body: => T): T =
-    WriteLease.withLease(hadoopFs, lockPath, op)(body)
-
   /** Remove a stale write lease left by a CRASHED writer (never call
     * while a live writer holds it — that reintroduces the lost-update
-    * race the lease exists to prevent). */
-  def breakLease(): Unit = hadoopFs.delete(lockPath, true)
+    * race the lease exists to prevent). Every mutating op runs under
+    * the single-writer lease (see [[WriteLease]]). */
+  def breakLease(): Unit = WriteLease.breakLease(spark, path)
 
   def exists: Boolean = {
     val p = new org.apache.hadoop.fs.Path(path)
-    hadoopFs.exists(p)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
 
   def load(): DataFrame = spark.read.parquet(path)
@@ -268,32 +311,12 @@ final class ParquetStore(val spark: SparkSession, val path: String,
   /** Atomic replace: write to `<path>.__tmp`, swap, keep `<path>.__bak`
     * until the swap succeeds (IO5, farming.py:549-580). */
   def replaceWith(df: DataFrame): Unit =
-    locked("replace")(replaceWithUnlocked(df))
+    WriteLease.withLease(spark, path, "replace")(replaceWithUnlocked(df))
 
   private def replaceWithUnlocked(df: DataFrame): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
     val p = new org.apache.hadoop.fs.Path(path)
-    val tmp = new org.apache.hadoop.fs.Path(path + ".__tmp")
-    val bak = new org.apache.hadoop.fs.Path(path + ".__bak")
-    val fs = p.getFileSystem(conf)
-    writer(df).parquet(tmp.toString)
-    // Every rename's boolean result is checked: proceeding past a
-    // failed swap (dest recreated concurrently, cross-FS rename quirk)
-    // and then deleting .__bak would destroy the only surviving copy.
-    // On failure the store is left recoverable — either untouched at
-    // <path> or intact at <path>.__bak — and the caller gets an
-    // IOException naming the failed step.
-    def renameOrAbort(from: org.apache.hadoop.fs.Path,
-                      to: org.apache.hadoop.fs.Path, keep: String): Unit =
-      if (!fs.rename(from, to))
-        throw new java.io.IOException(
-          s"store swap: rename $from -> $to failed; $keep")
-    if (fs.exists(bak)) fs.delete(bak, true)
-    if (fs.exists(p))
-      renameOrAbort(p, bak, s"store left untouched at $p")
-    renameOrAbort(tmp, p,
-      s"previous store preserved at $bak (restore by renaming it back)")
-    if (fs.exists(bak)) fs.delete(bak, true)
+    WriteLease.swap(p.getFileSystem(spark.sparkContext.hadoopConfiguration),
+      p, "store")(tmp => writer(df).parquet(tmp.toString))
   }
 
   /** M4/M5: merge `neu` into the store (creates it if absent).
@@ -324,66 +347,48 @@ final class ParquetStore(val spark: SparkSession, val path: String,
     * read-merge-swap path remains for unpartitioned stores and for
     * deltas that introduce new value columns (a partition-scoped write
     * of a widened schema would leave untouched partitions narrow). */
-  def mergeIn(neu: DataFrame, mode: Merge.Mode = Merge.NoConflicts): Unit = locked("mergeIn") {
-    if (!exists) writer(neu).parquet(path)
-    else {
-      val old = load()
-      val prunable = partitionCols.nonEmpty &&
-        partitionCols.forall(keys.contains) &&
-        neu.columns.forall(old.columns.contains)
-      if (!prunable) {
-        // replaceWith writes to <path>.__tmp BEFORE touching <path> —
-        // the write is the materialization point, and a NoConflicts
-        // raise_error fires during it (before any mutation) → rethrow
-        Merge.orConflict(replaceWithUnlocked(Merge.merge(old, neu, keys, mode)))
-      } else {
-        // bounded collect: the distinct partition tuples of ONE delta
-        val touched = neu.select(partitionCols.map(col): _*).distinct().collect()
-        if (touched.nonEmpty) {
-          val pred = touched.map { r =>
-            partitionCols.zipWithIndex
-              .map { case (c, i) => col(c) <=> lit(r.get(i)) }
-              .reduce(_ && _)
-          }.reduce(_ || _)
-          // stage the merged delta on disk before overwriting the
-          // partitions it was computed from (conflicts fire here)
-          val stage = new org.apache.hadoop.fs.Path(path + ".__stage")
-          val fs = stage.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          Merge.orConflict(
-            Merge.merge(old.filter(pred), neu, keys, mode)
-              .select(old.columns.map(col).toIndexedSeq: _*)
-              .write.mode(SaveMode.Overwrite).parquet(stage.toString))
-          // read back as written (no imposed schema: the store read
-          // infers partition-col types from dir names, which can be
-          // narrower than the staged data columns)
-          try
-            spark.read.parquet(stage.toString)
-              .write.mode(SaveMode.Overwrite)
+  def mergeIn(neu: DataFrame, mode: Merge.Mode = Merge.NoConflicts): Unit =
+    WriteLease.withLease(spark, path, "mergeIn") {
+      if (!exists) writer(neu).parquet(path)
+      else {
+        val old = load()
+        val prunable = partitionCols.nonEmpty &&
+          partitionCols.forall(keys.contains) &&
+          neu.columns.forall(old.columns.contains)
+        if (!prunable) {
+          // replaceWith writes to <path>.__tmp BEFORE touching <path> —
+          // the write is the materialization point, and a NoConflicts
+          // raise_error fires during it (before any mutation) → rethrow
+          Merge.orConflict(replaceWithUnlocked(Merge.merge(old, neu, keys, mode)))
+        } else
+          Merge.mergeTouched(old, neu, keys, partitionCols, mode,
+            new org.apache.hadoop.fs.Path(path + ".__stage")) {
+            _.write.mode(SaveMode.Overwrite)
               .option("partitionOverwriteMode", "dynamic")
               .partitionBy(partitionCols: _*)
               .parquet(path)
-          finally fs.delete(stage, true)
-        }
+          }
       }
     }
-  }
 
   /** M11 `Sampler.add_df`: append rows (long table, no alignment). */
-  def append(rows: DataFrame): Unit = locked("append") {
+  def append(rows: DataFrame): Unit = WriteLease.withLease(spark, path, "append") {
     if (!exists) writer(rows).parquet(path)
     else rows.write.mode(SaveMode.Append).partitionBy(partitionCols: _*).parquet(path)
   }
 
   /** M7 `expand_dims`: add a constant coordinate to the whole store.
     * (No checkpoint: replaceWith's tmp write reads the intact store.) */
-  def expandDims(name: String, value: Any): Unit = locked("expandDims") {
-    replaceWithUnlocked(load().withColumn(name, lit(value)))
-  }
+  def expandDims(name: String, value: Any): Unit =
+    WriteLease.withLease(spark, path, "expandDims") {
+      replaceWithUnlocked(load().withColumn(name, lit(value)))
+    }
 
   /** M8 `drop_sel`: delete coordinate values from a dimension. */
-  def dropSel(dim: String, values: Seq[Any]): Unit = locked("dropSel") {
-    replaceWithUnlocked(load().filter(!col(dim).isin(values: _*)))
-  }
+  def dropSel(dim: String, values: Seq[Any]): Unit =
+    WriteLease.withLease(spark, path, "dropSel") {
+      replaceWithUnlocked(load().filter(!col(dim).isin(values: _*)))
+    }
 
   /** M10 Ellipsis axis: the store's own coordinates for `axis`. */
   def coords(axis: String): DataFrame =
@@ -422,31 +427,27 @@ final class BucketedStore(val spark: SparkSession, val table: String,
   private val bucketKeys = keys.filterNot(partitionCols.contains)
   require(bucketKeys.nonEmpty, "at least one key must remain for bucketing")
 
-  def exists: Boolean = spark.catalog.tableExists(table)
+  private val tbl = new BucketedTable(spark, table, bucketKeys, nBuckets,
+    partitionCols)
+  /** Single-writer lease, same contract as [[ParquetStore]] (see
+    * [[WriteLease]]): every mutator holds it, so a replaceWith racing a
+    * mergeIn fails loudly instead of silently dropping the merge's rows. */
+  private val lease = BucketedTable.inWarehouse(spark,
+    s"graft-store-${table.replace('.', '_')}").toString
 
-  def load(): DataFrame = spark.table(table)
+  def exists: Boolean = tbl.exists
 
-  private def write(df: DataFrame, mode: SaveMode): Unit = {
-    // bucket-spec-aligned write (see DedupSnapshot.writeBucketed):
-    // repartition(nBuckets, bucketKeys) uses the same murmur3 pmod as
-    // the bucketing, so each task writes one file per (partition dir,
-    // bucket) instead of every upstream task spraying a file into
-    // every bucket it touches. Content identical; layout only.
-    val aligned = df.repartition(nBuckets,
-      bucketKeys.map(org.apache.spark.sql.functions.col): _*)
-    val w0 = aligned.write.mode(mode)
-    val w = if (partitionCols.nonEmpty) w0.partitionBy(partitionCols: _*) else w0
-    w.bucketBy(nBuckets, bucketKeys.head, bucketKeys.tail: _*)
-      .sortBy(bucketKeys.head, bucketKeys.tail: _*)
-      .format("parquet")
-      .saveAsTable(table)
-  }
+  def load(): DataFrame = tbl.load()
 
-  /** Leased like every other mutator (the WriteLease contract): a
-    * replaceWith racing a concurrent mergeIn must fail loudly, not
-    * silently drop the merge's rows. */
+  /** DROP the table and delete its warehouse location (a previous
+    * session's leftover included), under the lease. */
+  def drop(): Unit = WriteLease.withLease(spark, lease, "drop")(tbl.drop())
+
+  /** Remove a stale lease left by a crashed writer. */
+  def breakLease(): Unit = WriteLease.breakLease(spark, lease)
+
   def replaceWith(df: DataFrame): Unit =
-    locked("replace")(write(df, SaveMode.Overwrite))
+    WriteLease.withLease(spark, lease, "replace")(tbl.write(df, SaveMode.Overwrite))
 
   /** Staging dir for read-before-overwrite materialization: the table
     * is both the source and the sink of a merge, so the merged frame
@@ -458,26 +459,8 @@ final class BucketedStore(val spark: SparkSession, val table: String,
   // paths as hidden metadata ("All paths were ignored" on the staged
   // read — worked by accident on the direct-path branch, but glob and
   // partition-discovery listings genuinely skip such dirs)
-  private def stagePath = new org.apache.hadoop.fs.Path(
-    spark.conf.get("spark.sql.warehouse.dir"),
+  private def stagePath = BucketedTable.inWarehouse(spark,
     s"graft-stage-${table.replace('.', '_')}")
-
-  private def lockPath = new org.apache.hadoop.fs.Path(
-    spark.conf.get("spark.sql.warehouse.dir"),
-    s"graft-lock-${table.replace('.', '_')}")
-
-  /** Single-writer lease, same contract as [[ParquetStore]] (see
-    * [[WriteLease]]): a concurrent mutator fails loudly instead of
-    * losing the other writer's update. */
-  private def locked[T](op: String)(body: => T): T = {
-    val fs = lockPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    WriteLease.withLease(fs, lockPath, op)(body)
-  }
-
-  /** Remove a stale lease left by a crashed writer. */
-  def breakLease(): Unit = lockPath
-    .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    .delete(lockPath, true)
 
   /** M4/M5 over the bucketed table: store-side exchange-free merge.
     *
@@ -492,48 +475,26 @@ final class BucketedStore(val spark: SparkSession, val table: String,
     * aligned to the table's column layout first. Both branches stage
     * the merged frame on disk (see [[stagePath]]) before overwriting
     * the table they read from. */
-  def mergeIn(neu: DataFrame, mode: Merge.Mode = Merge.NoConflicts): Unit = locked("mergeIn") {
-    if (!exists) write(neu, SaveMode.ErrorIfExists)
-    else {
-      val old = load()
-      val stage = stagePath
-      val fs = stage.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val prunable = partitionCols.nonEmpty &&
-        neu.columns.forall(old.columns.contains)
-      if (!prunable) {
-        Merge.orConflict(Merge.merge(old, neu, keys, mode)
-          .write.mode(SaveMode.Overwrite).parquet(stage.toString))
-        try write(spark.read.parquet(stage.toString), SaveMode.Overwrite)
-        finally fs.delete(stage, true)
-      } else {
-        val touched = neu.select(partitionCols.map(col): _*).distinct().collect()
-        if (touched.nonEmpty) {
-          val pred = touched.map { r =>
-            partitionCols.zipWithIndex
-              .map { case (c, i) => col(c) <=> lit(r.get(i)) }
-              .reduce(_ && _)
-          }.reduce(_ || _)
-          Merge.orConflict(
-            Merge.merge(old.filter(pred), neu, keys, mode)
-              .select(old.columns.map(col).toIndexedSeq: _*)
-              .write.mode(SaveMode.Overwrite).parquet(stage.toString))
-          val overwriteMode = "spark.sql.sources.partitionOverwriteMode"
-          val prev = spark.conf.getOption(overwriteMode)
-          spark.conf.set(overwriteMode, "dynamic")
-          try
-            spark.read.parquet(stage.toString)
-              .write.mode(SaveMode.Overwrite).insertInto(table)
-          finally {
-            prev match {
+  def mergeIn(neu: DataFrame, mode: Merge.Mode = Merge.NoConflicts): Unit =
+    WriteLease.withLease(spark, lease, "mergeIn") {
+      if (!exists) tbl.write(neu, SaveMode.ErrorIfExists)
+      else {
+        val old = load()
+        if (partitionCols.isEmpty || !neu.columns.forall(old.columns.contains))
+          Merge.orConflict(replaceStagedUnlocked(Merge.merge(old, neu, keys, mode)))
+        else Merge.mergeTouched(old, neu, keys, partitionCols, mode, stagePath) {
+          staged =>
+            val overwriteMode = "spark.sql.sources.partitionOverwriteMode"
+            val prev = spark.conf.getOption(overwriteMode)
+            spark.conf.set(overwriteMode, "dynamic")
+            try staged.write.mode(SaveMode.Overwrite).insertInto(table)
+            finally prev match {
               case Some(v) => spark.conf.set(overwriteMode, v)
               case None    => spark.conf.unset(overwriteMode)
             }
-            fs.delete(stage, true)
-          }
         }
       }
     }
-  }
 
   /** M9 `missing_only` against the bucketed store. */
   def missing(grid: DataFrame): DataFrame =
@@ -546,14 +507,13 @@ final class BucketedStore(val spark: SparkSession, val table: String,
     * with its executors). Callers hold the lease. */
   private def replaceStagedUnlocked(df: DataFrame): Unit = {
     val stage = stagePath
-    val fs = stage.getFileSystem(spark.sparkContext.hadoopConfiguration)
     df.write.mode(SaveMode.Overwrite).parquet(stage.toString)
     // The Overwrite below drops the managed table before rewriting it,
     // so until it succeeds the stage IS the only complete copy — keep
     // it on failure (mirror of ParquetStore.replaceWithUnlocked's
     // .__bak discipline) and name it in the error so the operator can
     // recover by re-running the swap from the stage.
-    try write(spark.read.parquet(stage.toString), SaveMode.Overwrite)
+    try tbl.write(spark.read.parquet(stage.toString), SaveMode.Overwrite)
     catch {
       case e: Throwable =>
         throw new java.io.IOException(
@@ -561,27 +521,29 @@ final class BucketedStore(val spark: SparkSession, val table: String,
             "preserved and holds the full post-mutation table — re-run the " +
             "mutation or restore from the stage", e)
     }
-    fs.delete(stage, true)
+    stage.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(stage, true)
   }
 
   /** M11 `Sampler.add_df`: append rows — bucketed append keeps the
     * layout (Spark verifies matching bucket spec on saveAsTable
     * Append). API parity with [[ParquetStore.append]]. */
-  def append(rows: DataFrame): Unit = locked("append") {
-    if (!exists) write(rows, SaveMode.ErrorIfExists)
-    else write(rows.select(load().columns.map(col).toIndexedSeq: _*),
+  def append(rows: DataFrame): Unit = WriteLease.withLease(spark, lease, "append") {
+    if (!exists) tbl.write(rows, SaveMode.ErrorIfExists)
+    else tbl.write(rows.select(load().columns.map(col).toIndexedSeq: _*),
       SaveMode.Append)
   }
 
   /** M7 `expand_dims`: add a constant coordinate to the whole store —
     * parity with [[ParquetStore.expandDims]]. */
-  def expandDims(name: String, value: Any): Unit = locked("expandDims") {
-    replaceStagedUnlocked(load().withColumn(name, lit(value)))
-  }
+  def expandDims(name: String, value: Any): Unit =
+    WriteLease.withLease(spark, lease, "expandDims") {
+      replaceStagedUnlocked(load().withColumn(name, lit(value)))
+    }
 
   /** M8 `drop_sel`: delete coordinate values from a dimension —
     * parity with [[ParquetStore.dropSel]]. */
-  def dropSel(dim: String, values: Seq[Any]): Unit = locked("dropSel") {
-    replaceStagedUnlocked(load().filter(!col(dim).isin(values: _*)))
-  }
+  def dropSel(dim: String, values: Seq[Any]): Unit =
+    WriteLease.withLease(spark, lease, "dropSel") {
+      replaceStagedUnlocked(load().filter(!col(dim).isin(values: _*)))
+    }
 }

@@ -407,6 +407,37 @@ class DedupSpec extends SparkSpec {
       s"capped single-bucket volume $capped not bounded")
   }
 
+  test("property: asymmetricBandedPairs(delta, store) == the delta-touching " +
+       "bandedPairs over store ∪ delta, cap off and engaged, both salts") {
+    // seeded random disjoint store/delta banded frames with few buckets
+    // per band, so caps 2-4 flood most buckets and the salt splits them
+    for (seed <- 0 until 4) {
+      val rnd = new scala.util.Random(seed)
+      val nStore = 10 + rnd.nextInt(20)
+      val ids = rnd.shuffle((0L until (nStore + 3 + rnd.nextInt(10))).toList)
+      val (storeIds, deltaIds) = ids.splitAt(nStore)
+      val bands = 1 + rnd.nextInt(3)
+      val nBuckets = 2 + rnd.nextInt(4)
+      def banded(side: Seq[Long]) = (for (id <- side; b <- 0 until bands)
+        yield (id, b, rnd.nextInt(nBuckets).toLong)).toDF("id", "band", "bucket")
+      val store = banded(storeIds)
+      val delta = banded(deltaIds)
+      val inDelta = deltaIds.toSet
+      val cap = 2 + seed % 3
+      for ((c, salt) <- Seq((0, Dedup.BucketSalt.XxHash),
+                            (cap, Dedup.BucketSalt.XxHash),
+                            (cap, Dedup.BucketSalt.Md5("asym")))) {
+        def pairs(df: org.apache.spark.sql.DataFrame) =
+          df.as[(Long, Long)].collect().toSet
+        val got = pairs(Dedup.asymmetricBandedPairs(delta, store, c, salt))
+        val want = pairs(Dedup.bandedPairs(store.unionByName(delta), c, salt))
+          .filter { case (a, b) => inDelta(a) || inDelta(b) }
+        assert(got == want, s"seed $seed cap $c salt $salt")
+        if (c == 0) assert(want.nonEmpty, s"seed $seed: no delta pairs at all")
+      }
+    }
+  }
+
   test("connected components: chains merge transitively, keepers are min ids") {
     val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L), (20L, 21L), (21L, 22L), (20L, 22L))
       .toDF("id_a", "id_b")
